@@ -6,8 +6,10 @@ Spark-first re-expression of the reference Airflow DAG
 | Reference task                  | Here                                 |
 | ---                             | ---                                  |
 | discover_new_runs (:176-221)    | ``discover`` — binaryFile scan →     |
-|                                 | run-level agg → anti-join ledgers →  |
-|                                 | stable sort → batch cap              |
+|                                 | run-level agg → left-join the        |
+|                                 | ledger's per-run state, drop done    |
+|                                 | and retired runs → stable sort →     |
+|                                 | batch cap                            |
 | wait_until_quiet (:224-243)     | ``quiet_filter`` — declarative: keep |
 |                                 | runs whose newest mtime is older     |
 |                                 | than quiet_seconds (no sleeping; the |
@@ -19,7 +21,8 @@ Spark-first re-expression of the reference Airflow DAG
 | archive_original (:346-439)     | ``archive`` — tar.gz via             |
 |                                 | mapInPandas, skip|replace policy,    |
 |                                 | optional delete-original             |
-| verify_batch (:442-476)         | ``verify`` — failure-threshold agg   |
+| verify_batch (:442-476)         | ``verify`` — failure-threshold count |
+|                                 | over the collected batch (driver)    |
 
 The conversion payload transform is a STUB (the real tool is a
 closed-source Windows binary in the reference; this container has no
@@ -28,18 +31,22 @@ input bytes' md5. The Spark plumbing — discovery, ledgers, schema,
 Arrow batching, atomic writes, idempotent re-runs — is real and
 tested (tests/test_pipeline.py).
 
-Scale: discovery is a parallel parquet-style file listing (Spark's
-InMemoryFileIndex lists in parallel on the driver+executors);
-per-run state rides in broadcast-sized ledger parquet; conversion
-fans out one task per partition of runs with Arrow transfer only of
-metadata + content bytes. At 100 TB of runs the only care point is
-listing cadence — swap the directory scan for the streaming twin
-(streaming/watch.py) which tails a file-source incrementally.
+Scale: every cycle lists the whole watch tree (Spark's
+InMemoryFileIndex lists in parallel on the driver+executors), so
+listing is the per-cycle fixed cost that grows with the tree —
+``delete_original`` keeps the tree to the unconverted runs. The
+attempt ledger is read once per cycle and aggregated to one row per
+run ever attempted before it is joined onto the listing (Spark
+broadcasts it while it is under the broadcast threshold and shuffles
+beyond). Only the batch — at most ``max_map`` rows of run metadata —
+is collected to the driver; conversion and archiving run on
+executors.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import tarfile
 import time
 from dataclasses import dataclass, field
@@ -52,17 +59,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-)
-
-RUN_SCHEMA = StructType(
-    [
-        StructField("run_dir", StringType()),
-        StructField("base", StringType()),
-        StructField("plate_rel", StringType()),
-        StructField("n_files", LongType()),
-        StructField("total_bytes", LongType()),
-        StructField("newest_mtime_ms", LongType()),
-    ]
 )
 
 CONVERT_SCHEMA = StructType(
@@ -144,33 +140,35 @@ class WatchConvertPipeline:
     def discover(self) -> DataFrame:
         """Run-level view of the watch tree via a binaryFile scan.
 
-        Layout (= reference): watch_dir/<plate>/<run>.d/<files>.
-        Returns one row per run with size/mtime aggregates, minus
-        already-converted runs (output exists in the conversion
-        ledger) and permanently-skipped runs, stably sorted and
-        capped at max_map.
+        Layout (= reference): watch_dir/<plate>/<run>.d/<files>; every
+        file at any depth under the run dir counts toward its run
+        (instruments write into subdirectories such as AcqData/);
+        files outside a run dir at that depth are ignored. Returns one row per run with size/mtime aggregates and the
+        ledger's ``prev_attempts``, minus runs that are done (an ``ok``
+        or ``already_converted`` ledger row) or retired (max_attempts
+        used up), stably sorted and capped at max_map.
         """
         cfg = self.cfg
-        files = (
+        watch = os.path.abspath(cfg.watch_dir)
+        # binaryFile yields file:/... URIs; the scheme is left out of
+        # run_dir so downstream os-level stages get plain paths
+        run = (
+            f"^(?:file:)?({re.escape(watch)}/([^/]+)/([^/]+)"
+            f"{re.escape(cfg.run_suffix)})/"
+        )
+        runs = (
             self.spark.read.format("binaryFile")
             .option("recursiveFileLookup", "true")
             .load(cfg.watch_dir)
-            # binaryFile yields file:/... URIs; strip the scheme so
-            # downstream os-level stages get plain paths
             .select(
-                F.regexp_replace("path", "^file:", "").alias("path"),
+                F.regexp_extract("path", run, 1).alias("run_dir"),
+                F.regexp_extract("path", run, 3).alias("base"),
+                F.regexp_extract("path", run, 2).alias("plate_rel"),
                 "length",
                 "modificationTime",
             )
-        )
-        suffix = cfg.run_suffix.replace(".", "\\.")
-        runs = (
-            files.withColumn(
-                "run_dir",
-                F.regexp_extract("path", f"^(.*{suffix})/[^/]+$", 1),
-            )
             .where(F.col("run_dir") != "")
-            .groupBy("run_dir")
+            .groupBy("run_dir", "base", "plate_rel")
             .agg(
                 F.count("*").alias("n_files"),
                 F.sum("length").alias("total_bytes"),
@@ -178,26 +176,25 @@ class WatchConvertPipeline:
                 .cast("long")
                 .alias("newest_mtime_ms"),
             )
-            .withColumn(
-                "base",
-                F.regexp_extract("run_dir", f"([^/]+){suffix}$", 1),
-            )
-            .withColumn(
-                "plate_rel",
-                F.regexp_extract("run_dir", "^.*/([^/]+)/[^/]+$", 1),
-            )
-            .select(
-                "run_dir", "base", "plate_rel", "n_files", "total_bytes",
-                "newest_mtime_ms",
-            )
         )
         ledger = self._read_ledger()
-        if ledger is not None:
-            done = ledger.where(
-                (F.col("status") == "ok")
-                | (F.col("attempts") >= cfg.max_attempts)
-            ).select("base", "plate_rel")
-            runs = runs.join(F.broadcast(done), ["base", "plate_rel"], "left_anti")
+        if ledger is None:
+            runs = runs.withColumn("prev_attempts", F.lit(0))
+        else:
+            state = ledger.groupBy("base", "plate_rel").agg(
+                F.max("attempts").alias("prev_attempts"),
+                F.max(F.col("status").isin("ok", "already_converted")).alias(
+                    "done"
+                ),
+            )
+            runs = (
+                runs.join(state, ["base", "plate_rel"], "left")
+                .fillna({"prev_attempts": 0, "done": False})
+                .where(
+                    ~F.col("done") & (F.col("prev_attempts") < cfg.max_attempts)
+                )
+                .drop("done")
+            )
         return runs.orderBy("run_dir").limit(cfg.max_map)
 
     # -- stage 2: wait_until_quiet ----------------------------------------
@@ -232,7 +229,6 @@ class WatchConvertPipeline:
         out_root = cfg.output_dir
         converter = cfg.extra.get("converter")
         converter_ctx = dict(cfg.extra.get("converter_ctx", {}))
-        runs = self._with_prev_attempts(runs)
 
         def do_convert(batches):
             import gzip as gzmod
@@ -273,18 +269,21 @@ class WatchConvertPipeline:
                         else:
                             h = hashlib.md5()
                             n_in = 0
-                            for fn in sorted(os.listdir(r.run_dir)):
-                                fp = os.path.join(r.run_dir, fn)
-                                if os.path.isfile(fp):
-                                    data = open(fp, "rb").read()
-                                    if data.startswith(b"CORRUPT"):
-                                        # stand-in for the real tool's
-                                        # nonzero exit on unreadable input
-                                        raise ValueError(
-                                            f"corrupt input {fp}"
-                                        )
-                                    n_in += len(data)
-                                    h.update(data)
+                            # every file at any depth, in sorted
+                            # relative-path order
+                            for fp in sorted(
+                                os.path.join(d, fn)
+                                for d, _, fns in os.walk(r.run_dir)
+                                for fn in fns
+                            ):
+                                with open(fp, "rb") as f:
+                                    data = f.read()
+                                if data.startswith(b"CORRUPT"):
+                                    # stand-in for the real tool's
+                                    # nonzero exit on unreadable input
+                                    raise ValueError(f"corrupt input {fp}")
+                                n_in += len(data)
+                                h.update(data)
                             if n_in == 0:
                                 raise ValueError(f"empty run dir {r.run_dir}")
                             payload = (
@@ -393,17 +392,12 @@ class WatchConvertPipeline:
         return converted.mapInPandas(do_archive, ARCHIVE_SCHEMA)
 
     # -- stage 5: verify -----------------------------------------------------
-    def verify(self, converted: DataFrame) -> dict:
-        """Reference verify_batch: raise if all failed or failures
-        exceed min(threshold, total)."""
-        agg = converted.agg(
-            F.count("*").alias("total"),
-            F.sum((F.col("status") == "failed").cast("int")).alias("failed"),
-            F.sum(
-                (F.col("status") == "already_converted").cast("int")
-            ).alias("skipped"),
-        ).collect()[0]
-        total, failed = agg.total or 0, agg.failed or 0
+    def verify(self, rows: list) -> dict:
+        """Reference verify_batch over the collected batch rows: raise
+        if all failed or failures exceed min(threshold, total)."""
+        total = len(rows)
+        failed = sum(r.status == "failed" for r in rows)
+        skipped = sum(r.status == "already_converted" for r in rows)
         threshold = min(self.cfg.fail_threshold, total)
         if total > 0 and failed == total:
             raise RuntimeError(f"All {total} conversions failed")
@@ -414,8 +408,8 @@ class WatchConvertPipeline:
         return {
             "total": total,
             "failed": failed,
-            "skipped": agg.skipped or 0,
-            "succeeded": total - failed - (agg.skipped or 0),
+            "skipped": skipped,
+            "succeeded": total - failed - skipped,
         }
 
     # -- ledger -------------------------------------------------------------
@@ -433,40 +427,6 @@ class WatchConvertPipeline:
 
     def _read_ledger(self) -> DataFrame | None:
         return self._ledger_table.read(self.spark)
-
-    def _with_prev_attempts(self, runs: DataFrame) -> DataFrame:
-        """Ledger attempt counts joined onto the batch as a column.
-
-        The all-time ledger never materializes on the driver (it grows
-        with total run history forever): the ledger is first SEMI-
-        filtered by the bounded discovery batch (broadcast ≤ max_map
-        keys, map-side, before any shuffle), the surviving rows —
-        ≤ max_map keys' worth — are aggregated, and that tiny result
-        is broadcast back onto the batch as a left join. Per-cycle
-        ledger cost is one pruned scan; nothing unbounded crosses the
-        driver.
-        """
-        led = self._read_ledger()
-        if led is None:
-            return runs.withColumn("prev_attempts", F.lit(0))
-        # Materialize the bounded batch ONCE before referencing it
-        # twice (broadcast keys + left side of the final join):
-        # without this the discovery binaryFile listing + agg +
-        # anti-join + orderBy/limit plan re-executes 2-3x per cycle —
-        # same lineage-cut rationale as run_once. ≤ max_map metadata
-        # rows, so eager checkpoint cost is trivial at any scale.
-        runs = runs.localCheckpoint(eager=True)
-        keys = runs.select("base", "plate_rel")
-        prev = (
-            led.join(F.broadcast(keys), ["base", "plate_rel"], "left_semi")
-            .groupBy("base", "plate_rel")
-            .agg(F.max("attempts").alias("prev_attempts"))
-        )
-        return runs.join(
-            F.broadcast(prev), ["base", "plate_rel"], "left"
-        ).withColumn(
-            "prev_attempts", F.coalesce("prev_attempts", F.lit(0))
-        )
 
     def _append_ledger(self, converted: DataFrame) -> None:
         # manifest-commit (pipeline/atomic.py): a crash mid-append can
@@ -491,13 +451,15 @@ class WatchConvertPipeline:
             self.spark.sparkContext.setLocalProperty(
                 "spark.scheduler.pool", pool
             )
+        # the cycle's only ledger read happens inside discover
         runs = self.quiet_filter(self.discover(), now_ms=now_ms)
         # Materialize the batch ONCE and cut lineage: the convert plan
         # depends on the ledger parquet, and appending to that ledger
         # below would invalidate a cache and silently re-run the cycle
         # against the updated ledger (side effects twice, stats of an
         # empty batch). The batch is bounded metadata (≤ max_map
-        # rows), so a driver round-trip is sound at any data scale.
+        # rows), so a driver round-trip is sound at any data scale;
+        # archive, ledger append and verify all start from these rows.
         rows = self.convert(runs).collect()
         converted = self.spark.createDataFrame(rows, CONVERT_SCHEMA)
         archived = self.archive(converted)
@@ -510,7 +472,7 @@ class WatchConvertPipeline:
         self._append_ledger(converted)
         metrics = PipelineMetrics(self.spark, self.cfg.output_dir)
         try:
-            stats = self.verify(converted)
+            stats = self.verify(rows)
         except RuntimeError:
             metrics.record_cycle(
                 {"total": len(rows), "verdict": "failed"},

@@ -132,6 +132,10 @@ def test_pipeline_cycle_crash_rerun_idempotent(spark, tmp_path):
     assert len(rows) == 1
     assert rows[0].base == "run1"
     assert rows[0].status in ("ok", "already_converted")
+    # the already_converted row retires the run: the next cycle does
+    # not rediscover it and the ledger keeps its single row
+    assert pipe.run_once()["total"] == 0
+    assert table.read(spark).count() == 1
 
 
 def test_time_travel_reads(spark, tmp_path):

@@ -6,11 +6,13 @@ policies, failure-threshold verification."""
 from __future__ import annotations
 
 import gzip
+import hashlib
 import os
 import tarfile
 import time
 
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from aichemy_data_pipelines_spark.pipeline.batch import (
@@ -20,13 +22,13 @@ from aichemy_data_pipelines_spark.pipeline.batch import (
 
 
 def make_tree(root, plates):
-    """plates: {plate: {run_base: {filename: bytes}}}"""
+    """plates: {plate: {run_base: {relative path: bytes}}}"""
     for plate, runs in plates.items():
         for base, files in runs.items():
-            d = os.path.join(root, plate, base + ".d")
-            os.makedirs(d, exist_ok=True)
-            for fn, data in files.items():
-                with open(os.path.join(d, fn), "wb") as f:
+            for rel, data in files.items():
+                fp = os.path.join(root, plate, base + ".d", rel)
+                os.makedirs(os.path.dirname(fp), exist_ok=True)
+                with open(fp, "wb") as f:
                     f.write(data)
 
 
@@ -57,6 +59,35 @@ def test_discover_finds_runs(pipe):
     r1 = next(r for r in runs if r.base == "run1")
     assert r1.n_files == 2 and r1.total_bytes == len(b"alpha") + len(b"beta")
     assert r1.plate_rel == "plate A"
+
+
+def test_nested_run_files_are_discovered_and_converted(pipe):
+    """Files below a run dir (the Agilent AcqData/ layout) count toward
+    their run: a run with data only in a subdirectory is discovered,
+    and a mixed run counts its nested files in n_files/total_bytes."""
+    make_tree(
+        pipe.cfg.watch_dir,
+        {
+            "plate_B": {
+                "nested": {"AcqData/MSScan.bin": b"scan", "AcqData/x.bin": b"y"}
+            },
+            "plate A": {"run2": {"AcqData/MSPeak.bin": b"peak-bytes"}},
+        },
+    )
+    runs = {r.base: r for r in pipe.discover().collect()}
+    assert set(runs) == {"run1", "run2", "run3", "nested"}
+    assert (runs["nested"].n_files, runs["nested"].total_bytes) == (2, 5)
+    assert runs["nested"].plate_rel == "plate_B"
+    assert runs["nested"].run_dir.endswith("/plate_B/nested.d")
+    assert (runs["run2"].n_files, runs["run2"].total_bytes) == (2, 15)
+    stats = pipe.run_once()
+    assert stats["succeeded"] == 4 and stats["failed"] == 0
+    out = os.path.join(
+        pipe.cfg.output_dir, "plate_B", "nested-converted.mzML.gz"
+    )
+    want = hashlib.md5(b"scan" + b"y").hexdigest()
+    with gzip.open(out) as f:
+        assert f'checksum="{want}" bytes="5"'.encode() in f.read()
 
 
 def test_quiet_filter_blocks_fresh_writes(pipe):
@@ -149,6 +180,28 @@ def test_verify_raises_when_all_fail(pipe, spark):
     make_tree(pipe.cfg.watch_dir, {"p": {"only_bad": {"x.bin": b"CORRUPT!"}}})
     with pytest.raises(RuntimeError, match="All 1 conversions failed"):
         pipe.run_once()
+
+
+def test_verify_counts_plain_rows(tmp_path):
+    """verify counts the collected batch rows on the driver: no
+    SparkSession needed."""
+    cfg = PipelineConfig(
+        watch_dir=str(tmp_path / "w"), output_dir=str(tmp_path / "o"),
+        archive_dir=str(tmp_path / "a"), fail_threshold=2,
+    )
+    v = WatchConvertPipeline(None, cfg)
+    assert v.verify([]) == {
+        "total": 0, "failed": 0, "skipped": 0, "succeeded": 0
+    }
+    rows = [Row(status=s) for s in
+            ("ok", "failed", "failed", "already_converted", "ok")]
+    # failed == min(fail_threshold, total) passes
+    assert v.verify(rows) == {
+        "total": 5, "failed": 2, "skipped": 1, "succeeded": 2
+    }
+    # one more failure raises
+    with pytest.raises(RuntimeError, match=r"3/6 conversions failed \(> 2\)"):
+        v.verify(rows + [Row(status="failed")])
 
 
 def test_delete_original(pipe):

@@ -231,62 +231,6 @@ def test_zorder_layout_tightens_both_dims(spark, tmp_path):
     assert spark.read.parquet(zdir).count() == li.count()
 
 
-def test_msruns_python_datasource_matches_discover(spark, tmp_path):
-    """The Python Data Source run lister (executor-side per-plate
-    listing) must produce exactly the rows binaryFile-based
-    discovery aggregates (pre-ledger-filter), on the same tree."""
-    import os
-
-    from aichemy_data_pipelines_spark.pipeline.batch import (
-        PipelineConfig,
-        WatchConvertPipeline,
-    )
-    from aichemy_data_pipelines_spark.sources.run_datasource import register
-
-    watch = tmp_path / "watch"
-    for plate, runs in {
-        "plate A": {"run1": [b"alpha", b"beta"], "run2": [b"gamma"]},
-        "plate_B": {"run3": [b"delta"]},
-    }.items():
-        for base, payloads in runs.items():
-            d = watch / plate / f"{base}.d"
-            d.mkdir(parents=True)
-            for i, p in enumerate(payloads):
-                (d / f"f{i}.bin").write_bytes(p)
-    # a non-run directory and an empty run must both be ignored
-    (watch / "plate A" / "notes").mkdir()
-    (watch / "plate_B" / "empty.d").mkdir()
-
-    register(spark)
-    got = sorted(
-        (r.base, r.plate_rel, r.n_files, r.total_bytes)
-        for r in spark.read.format("msruns")
-        .option("path", str(watch))
-        .load()
-        .collect()
-    )
-    cfg = PipelineConfig(
-        watch_dir=str(watch),
-        output_dir=str(tmp_path / "out"),
-        archive_dir=str(tmp_path / "arc"),
-        quiet_seconds=0,
-    )
-    want = sorted(
-        (r.base, r.plate_rel, r.n_files, r.total_bytes)
-        for r in WatchConvertPipeline(spark, cfg).discover().collect()
-    )
-    assert got == want
-    assert len(got) == 3
-    # listing parallelism = one task per plate
-    assert (
-        spark.read.format("msruns")
-        .option("path", str(watch))
-        .load()
-        .rdd.getNumPartitions()
-        == 2
-    )
-
-
 def test_morton_z_empty_input_no_crash(spark):
     from aichemy_data_pipelines_spark.sources.formats import with_morton_z
 
